@@ -102,7 +102,6 @@ object Bench {
       val good = attempts.filter(_._2)
       if (good.isEmpty) failed ::= name
       // fresh-state boundary between queries (see GraftSession.releaseQueryState)
-      SparkEntry.restore(spark) // drop this query's execConf overrides
       GraftSession.releaseQueryState(spark)
       val envArr = attempts.map { case (wall, _, env) =>
         // wall repeated inside the env entry so one iteration's counters

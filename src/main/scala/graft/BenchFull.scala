@@ -78,7 +78,6 @@ object BenchFull {
       // fresh-state boundary between queries (reference protocol: one
       // context per query) — without it checkpoint blocks from ~800
       // earlier executions evict later queries' state to disk
-      SparkEntry.restore(spark) // drop this query's execConf overrides
       // cached mode: drop the prepared plan now — holding 204 prepared
       // queries would pin their materialized exchange outputs (shuffle
       // files + driver references) for the whole run

@@ -106,7 +106,6 @@ object ClusterCheck {
         System.err.println(s"[cluster-check] $name FAILED: ${e.getMessage}")
       }
       // fresh-state boundary between queries (see GraftSession.releaseQueryState)
-      SparkEntry.restore(spark) // drop this query's execConf overrides
       GraftSession.releaseQueryState(spark)
     }
     // Verify-shaped oracle_sql.json restricted to the subset, so

@@ -1,7 +1,7 @@
 package graft
 
 /** One-off A/B harness: times registry queries through the REAL driver
-  * path (SparkEntry.queries → AdaptiveGate → execConf) under alternating
+  * path (SparkEntry.queries → AdaptiveGate) under alternating
   * session-conf variants within one JVM, so variant ratios are
   * same-window by construction (the r13 drift lesson: cross-window
   * absolute numbers on this host are meaningless, within-window ratios
@@ -56,7 +56,6 @@ object ConfProbe {
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        SparkEntry.restore(spark)
         val ms = (System.nanoTime() - t0) / 1e6
         val key = (name, vn)
         best(key) = math.min(best.getOrElse(key, Double.MaxValue), ms)

@@ -182,7 +182,6 @@ object FaultCheck {
         s""""executors_removed":$removed2,"elapsed_ms":${phase2Ms.round},""" +
         s""""identical_to_baseline":true}}""")
     println(s"[fault-check] PASS -> $outJson")
-    SparkEntry.restore(spark) // drop the last query's execConf overrides
     spark.stop()
   }
 

@@ -37,13 +37,14 @@ object PhaseProbe {
         val phases = df.queryExecution.tracker.phases.map { case (p, s) =>
           p -> (s.endTimeMs - s.startTimeMs)
         }
-        (tBuild - t0, tTotal - t0, phases)
+        (tBuild - t0, tTotal - t0, phases, df.sparkSession.conf)
       }
       val best = runs.minBy(_._2)
       val phaseStr = best._3.toSeq.sortBy(_._1)
         .map { case (p, ms) => s"$p=${ms}ms" }.mkString(" ")
-      val parts = spark.conf.get("spark.sql.shuffle.partitions")
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+      // the gate's decision lives on the executed frame's session
+      val parts = best._4.get("spark.sql.shuffle.partitions")
+      val aqe = best._4.get("spark.sql.adaptive.enabled")
       println(f"[phase] $name%-28s total=${best._2 / 1e6}%7.1f ms " +
         f"build=${best._1 / 1e6}%6.1f ms parts=$parts%s aqe=$aqe%s  $phaseStr")
       GraftSession.releaseQueryState(spark)

@@ -24,11 +24,11 @@ object PlanDump {
       // Scan ExistingRDD / parquet read — this dump is the plan evidence
       // for changes to the shingle substrate itself.
       // registry queries go through SparkEntry.tuned — the SAME
-      // driver-contract layer Bench/Verify execute (AdaptiveGate +
-      // execConf overrides) — so the dumped explain is the plan of the
-      // benched configuration, not of a bare Registry run (r13 advice:
-      // the bypass could mis-represent before/after evidence for queries
-      // with execConf/needsAqe)
+      // contract layer Bench/Verify execute (AdaptiveGate, and any
+      // conf a body puts on its own frame) — so the dumped explain is the
+      // plan of the benched configuration, not of a bare Registry run
+      // (r13 advice: the bypass could mis-represent before/after evidence
+      // for gated or needsAqe queries)
       val df =
         if (name == "minhash_sigbuild") graft.queries.TextOps.minhashSigPlan(spark, sfDir)
         else SparkEntry.tuned(Registry.byName(name))(spark, sfDir)
@@ -36,7 +36,6 @@ object PlanDump {
       val p = Paths.get(outDir, s"${name}_$tag.txt")
       Files.writeString(p, txt)
       println(s"[plandump] wrote $p (${txt.length} chars)")
-      SparkEntry.restore(spark)
     }
     spark.stop()
   }

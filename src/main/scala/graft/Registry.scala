@@ -14,24 +14,11 @@ final case class GQuery(
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     /** Declares that the query DEMONSTRATES adaptive runtime behavior
-      * (skew splits, rebalance writes): the driver-contract layer restores
-      * full-AQE defaults before the body runs instead of applying the
-      * small-plan single-shot path ([[graft.plans.AdaptiveGate]]). */
-    needsAqe: Boolean = false,
-    /** Execution-time conf overrides for THIS query, applied by the
-      * driver-contract layer ([[SparkEntry.tuned]]) after the body builds
-      * and restored before the next query runs. For regimes where a
-      * global default is wrong for one plan class — e.g. whole-stage
-      * codegen's buffered-copy output loop on pair-expansion tails
-      * (t_simhash_neardup, r12 JFR evidence). Plan-shape suites that call
-      * the Registry directly bypass this, as they bypass the gate. */
-    execConf: Map[String, String] = Map.empty,
-    /** Data-dependent guard on [[execConf]] (r12 verdict item 8): when
-      * present, the overrides apply only if this predicate holds — read
-      * AFTER the body builds, so the body can publish a measured signal
-      * (e.g. the simhash band-collision mass) via a session conf. None =
-      * unconditional. */
-    execConfIf: Option[SparkSession => Boolean] = None)
+      * (skew splits, rebalance writes): the contract layer
+      * ([[SparkEntry.tuned]]) returns its frame as built, under the
+      * caller's own AQE conf, instead of applying the small-plan
+      * single-shot path ([[graft.plans.AdaptiveGate]]). */
+    needsAqe: Boolean = false)
 
 object Registry {
   lazy val all: Seq[GQuery] =

@@ -16,51 +16,23 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.all.map(q => q.name -> tuned(q)).toMap
 
-  /** Per-query exec-conf overrides applied last round, with the values
-    * they displaced — restored before the next body so one query's
-    * overrides never leak into another's execution (same discipline as
-    * the gate's own marker conf). Driver mains run queries sequentially
-    * in one session, so a plain var suffices. */
-  private var prevExecConf: Map[String, Option[String]] = Map.empty
-
+  /** The body builds on the caller's session under its own conf (eager
+    * work — localCheckpoint, layout/store writes — included); the returned
+    * frame then executes on a child session carrying the gate's decision,
+    * unless the query declares `needsAqe`. The caller's conf is never
+    * written, so a query that throws leaks nothing and queries can share
+    * one session concurrently. */
   private[graft] def tuned(q: GQuery): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      // restore the session's own conf BEFORE every body: queries that
-      // execute jobs eagerly during construction (localCheckpoint,
-      // layout/store writes) must never inherit the PREVIOUS plan's
-      // single-shot conf (round-7 verdict item 3) — nor a previous
-      // query's execConf overrides
-      prevExecConf.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      }
-      prevExecConf = Map.empty
-      graft.plans.AdaptiveGate.reset(spark)
       val df = q.run(spark, dir)
-      if (!q.needsAqe) graft.plans.AdaptiveGate.tune(spark, df)
-      // applied AFTER the body: eager build-time work (localCheckpoint
-      // stages) runs under session defaults; only the remaining plan's
-      // EXECUTION (physical planning happens at first action) sees the
-      // overrides
-      if (q.execConf.nonEmpty && q.execConfIf.forall(_(spark))) {
-        prevExecConf = q.execConf.keys
-          .map(k => k -> spark.conf.getOption(k)).toMap
-        q.execConf.foreach { case (k, v) => spark.conf.set(k, v) }
-      }
-      df
+      if (q.needsAqe) df else graft.plans.AdaptiveGate.tune(df)
     }
 
-  /** Eagerly put back any execConf overrides left by the most recent
-    * tuned() invocation. Driver mains call this after a query's ACTION
-    * completes, so the session never carries a query-specific conf (e.g.
-    * `spark.sql.codegen.wholeStage=false`) into unrelated follow-on work —
-    * the r12 advisor flagged that the last registry query's overrides
-    * otherwise persist until the next tuned() call or session end. */
-  def restore(spark: SparkSession): Unit = {
-    prevExecConf.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
-    prevExecConf = Map.empty
-  }
+  /** No-op. Per-query confs live on the returned frame's session (see
+    * [[tuned]]), so there is nothing to put back; kept only for callers
+    * written against the old save/restore protocol. */
+  def restore(spark: SparkSession): Unit = ()
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

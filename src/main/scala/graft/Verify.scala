@@ -65,7 +65,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // fresh-state boundary between queries (see GraftSession.releaseQueryState)
-      SparkEntry.restore(spark) // drop this query's execConf overrides
       GraftSession.releaseQueryState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

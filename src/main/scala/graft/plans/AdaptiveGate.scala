@@ -29,8 +29,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * correctness gate itself — runs through it, while direct Registry use
   * (plan-shape specs, golden snapshots, partition-layout invariance
   * proofs) keeps hand-picked confs untouched. Queries that DEMONSTRATE
-  * adaptive runtime behavior declare `needsAqe` on their GQuery and are
-  * restored to full-AQE defaults before their body runs.
+  * adaptive runtime behavior declare `needsAqe` on their GQuery and skip
+  * the gate. The gate never writes the caller's conf: [[tune]] returns
+  * the frame re-bound to a child session that carries the decision.
   */
 object AdaptiveGate {
 
@@ -52,11 +53,6 @@ object AdaptiveGate {
     * 16 was flat-to-worse). Production analog: even a "small" interactive
     * query keeps enough width to use one executor's cores. */
   val MinPartitions: Long = 8L
-
-  /** Marker conf holding the session's own shuffle-partition setting while
-    * the gate has it overridden; presence ⇒ the gate owns the current
-    * value and adaptive state. */
-  private val OrigKey = "graft.autotune.origPartitions"
 
   /** Operational kill switch (GRAFT_NO_AUTOTUNE=1): run everything with
     * the session's own conf — for A/B floor measurement and as the
@@ -134,51 +130,53 @@ object AdaptiveGate {
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate]))
   }
 
-  /** Decide the execution mode for `df` (about to be executed), by plan
-    * size — no per-query special-casing:
+  /** `df` bound to the execution mode its plan size calls for — no
+    * per-query special-casing:
     *  - small (< [[SmallPlanBytes]] leaf bytes, no Generate): single-shot
     *    (adaptive off, constraint propagation off) — AQE stage rounds are
     *    pure latency here. Partitions = input/8 MB when every leaf is a
     *    file scan or literal; the session's FULL width when any leaf is
     *    checkpointed/in-memory (bytes then under-state the compute);
-    *  - small WITH Generate: the session's own AQE defaults — leaf size
-    *    under-states the pipeline, runtime stats must size it;
+    *  - small WITH Generate: `df` itself, under its session's own AQE
+    *    defaults — leaf size under-states the pipeline, runtime stats must
+    *    size it;
     *  - big (≥ threshold): AQE starting 16x wider, so reduce stages can
     *    scale past the cores-sized default instead of spilling.
-    * Idempotent per execution; sequential callers (Bench/Verify run
-    * queries one at a time) always see the conf their own plan chose. */
-  def tune(spark: SparkSession, df: DataFrame): Unit = {
-    if (disabled) return
+    * The decision lives on the returned frame's session
+    * ([[org.apache.spark.sql.graft.GraftBridge.withConf]]); `df`'s own
+    * session conf is never written, so there is nothing to undo and
+    * concurrent callers cannot see each other's decisions. */
+  def tune(df: DataFrame): DataFrame = {
+    if (disabled) return df
     val in = inputBytes(df)
-    val conf = spark.conf
-    if (in < SmallPlanBytes && !expands(df)) {
-      val orig = conf.getOption(OrigKey).getOrElse {
-        val cur = conf.get("spark.sql.shuffle.partitions")
-        conf.set(OrigKey, cur)
-        cur
-      }
-      val parts =
-        if (allLeavesFileBacked(df))
-          math.max(math.min(MinPartitions, orig.toLong),
-            math.min(orig.toLong, in / BytesPerPartition)).toInt
-        else orig.toInt
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", parts.toString)
-      // constraint propagation is an optimizer-TIME quadratic (per-node
-      // constraint sets over the join tree) whose payoff — inferred
-      // filters pruning big scans — is zero on a sub-GiB plan; probed
-      // -57 ms on q02, -44 ms on q11 at the SF1 floor profile, and it
-      // is Spark's own documented escape hatch for planning-bound
-      // workloads (spark.sql.constraintPropagation.enabled)
-      conf.set("spark.sql.constraintPropagation.enabled", "false")
-    } else {
-      reset(spark)
-      if (in >= SmallPlanBytes) {
-        val cores = conf.get("spark.sql.shuffle.partitions").toInt
-        conf.set(InitKey, (16 * cores).toString)
-      }
-    }
+    val cores = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
+    val overrides =
+      if (in < SmallPlanBytes && !expands(df)) Map(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> width(df, in, cores).toString,
+        // constraint propagation is an optimizer-TIME quadratic (per-node
+        // constraint sets over the join tree) whose payoff — inferred
+        // filters pruning big scans — is zero on a sub-GiB plan; probed
+        // -57 ms on q02, -44 ms on q11 at the SF1 floor profile, and it
+        // is Spark's own documented escape hatch for planning-bound
+        // workloads. Nothing else in graft turns it off, so it doubles
+        // as the single-shot flag [[OnePartitionSort]] reads.
+        "spark.sql.constraintPropagation.enabled" -> "false")
+      else if (in >= SmallPlanBytes) Map(InitKey -> (16 * cores).toString)
+      else Map.empty[String, String]
+    if (overrides.isEmpty) df
+    else org.apache.spark.sql.graft.GraftBridge.withConf(df, overrides)
   }
+
+  /** Single-shot reduce width: input/[[BytesPerPartition]] clamped to
+    * [min([[MinPartitions]], `full`), `full`] when every leaf of `sizing`
+    * is a file scan/literal; `full` otherwise — a checkpointed leaf
+    * reports bytes while hiding CPU-dense lineage (the v_knn_graph 1.38x
+    * failure). */
+  private def width(sizing: DataFrame, in: Long, full: Long): Int =
+    if (allLeavesFileBacked(sizing))
+      math.max(math.min(MinPartitions, full), math.min(full, in / BytesPerPartition)).toInt
+    else full.toInt
 
   /** Run `body` under a single-shot conf sized from `sizing`'s leaf
     * bytes — for ITERATIVE fixpoint loops over bounded state (connected-
@@ -195,7 +193,7 @@ object AdaptiveGate {
     * Loops whose sizing frame reads ≥ [[SmallPlanBytes]] keep the
     * caller's conf untouched: at 100 TB the pair graph is not small, and
     * its rounds genuinely want AQE. Restores exactly; nest-safe (plain
-    * save/restore, independent of the [[tune]]/[[reset]] override). */
+    * save/restore). */
   def scopedLoop[T](spark: SparkSession, sizing: DataFrame)(body: => T): T = {
     lazy val in = inputBytes(sizing)
     if (disabled || in >= SmallPlanBytes) body
@@ -203,21 +201,12 @@ object AdaptiveGate {
       val conf = spark.conf
       val savedParts = conf.get("spark.sql.shuffle.partitions")
       val savedAqe = conf.get("spark.sql.adaptive.enabled")
-      // same trust rule as [[tune]]: byte-sized narrowing only when every
-      // leaf is a file scan/literal — a checkpointed sizing leaf reports
-      // bytes while hiding CPU-dense lineage, and squeezing the loop body
-      // into ~1 partition would re-create the v_knn_graph 1.38x failure
-      // inside every iteration. Non-file-backed ⇒ keep the caller's full
-      // width; the scope still saves the per-iteration AQE stage rounds.
-      // Same [[MinPartitions]] floor as [[tune]] (r9 verdict nit: the
-      // asymmetry let a file-backed loop body serialize on 1-3 partitions
-      // on a 32-thread executor — exactly what the single-shot floor was
-      // built to prevent; r10 A/B over the loop family below).
-      val parts =
-        if (allLeavesFileBacked(sizing))
-          math.max(math.min(MinPartitions, savedParts.toLong),
-            math.min(savedParts.toLong, in / BytesPerPartition)).toInt
-        else savedParts.toInt
+      // same width rule and [[MinPartitions]] floor as [[tune]] (r9
+      // verdict nit: without the floor a file-backed loop body serialized
+      // on 1-3 partitions on a 32-thread executor); non-file-backed ⇒ the
+      // caller's full width, and the scope still saves the per-iteration
+      // AQE stage rounds
+      val parts = width(sizing, in, savedParts.toLong)
       conf.set("spark.sql.adaptive.enabled", "false")
       conf.set("spark.sql.shuffle.partitions", parts.toString)
       try body
@@ -226,19 +215,5 @@ object AdaptiveGate {
         conf.set("spark.sql.adaptive.enabled", savedAqe)
       }
     }
-  }
-
-  /** Restore the session's own adaptive + parallelism settings (no-op when
-    * the gate holds no override). */
-  def reset(spark: SparkSession): Unit = {
-    val conf = spark.conf
-    conf.getOption(OrigKey).foreach { orig =>
-      conf.set("spark.sql.shuffle.partitions", orig)
-      conf.set("spark.sql.adaptive.enabled", "true")
-      conf.set("spark.sql.constraintPropagation.enabled", "true")
-      conf.unset(OrigKey)
-    }
-    // wide-regime width is per-plan state, never session state
-    conf.unset(InitKey)
   }
 }

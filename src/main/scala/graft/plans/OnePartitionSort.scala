@@ -18,16 +18,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * full scan width because the single partition starts AT the shuffle
   * boundary.
   *
-  * Scope — two independent guards (round-10 advice, medium): the
-  * [[AdaptiveGate]] marker conf says the gate RECENTLY owned an
-  * execution, but it is session state that can outlive the small query
-  * that set it (any plan built in the same session before the next
-  * tune()/reset() inherits it). So the rule ALSO re-derives smallness
-  * from the plan in hand: leaf-source bytes (incl. subquery plans) under
-  * [[AdaptiveGate.SmallPlanBytes]] and no Generate (leaf bytes under-
-  * state an exploding pipeline — same rule as the gate itself). A large
-  * plan that inherits a leaked marker now keeps its parallel range sort;
-  * a small plan that inherits one gets the same rewrite the gate would
+  * Scope — two independent guards (round-10 advice, medium): the session
+  * must be a single-shot child of [[AdaptiveGate.tune]], recognised by
+  * constraint propagation being off (nothing else in graft turns it off);
+  * and the plan in hand must itself be small — leaf-source bytes (incl.
+  * subquery plans) under [[AdaptiveGate.SmallPlanBytes]] and no Generate
+  * (leaf bytes under-state an exploding pipeline — same rule as the gate
+  * itself). A big plan that is planned under a gated conf keeps its
+  * parallel range sort; a small plan gets the same rewrite the gate would
   * have chosen for it anyway. */
 object OnePartitionSort extends Rule[LogicalPlan] {
 
@@ -48,9 +46,7 @@ object OnePartitionSort extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (disabled ||
-      conf.getConfString("graft.autotune.origPartitions", "").isEmpty ||
-      !smallPlan(plan)) plan
+    if (disabled || conf.constraintPropagationEnabled || !smallPlan(plan)) plan
     else rewrite(plan)
 
   /** Structural top-down recursion instead of transformUp + pre-collected

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Catalog, GQuery}
 import graft.util.Num._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -901,85 +902,7 @@ object TextOps {
   val simhashNearDup: GQuery = GQuery(
     "t_simhash_neardup",
     "simhash pairs within Hamming<=3 via 4x15-bit band blocking",
-    (spark, dir) => {
-      val sh = simhashDf(spread(Catalog.table(spark, dir, "documents")))
-      // dup-collapse on the EXACT simhash value before the band join —
-      // the same discipline as pairsFromSig's signature collapse, and
-      // result-identical for the same reason: docs with equal simhash
-      // share every band (so intra-group pairs are always candidates,
-      // at hamming exactly 0) and contribute identical hamming to every
-      // cross pair. On a duplication-heavy corpus the band-bucket
-      // quadratic shrinks by the duplication factor squared: the r9
-      // probe on the 100× replica measured 500 k docs -> 72,405 distinct
-      // simhashes, with the uncollapsed plan spending 300 of its 421 s
-      // in a 3.36-BILLION-row candidate distinct (output: 1.04 B genuine
-      // pairs — that part is inherent to emitting every pair; this
-      // rewrite makes the candidate work scale with DISTINCT fingerprints
-      // while the output-sized expansion join stays ∝ result).
-      // localCheckpoint (one materialization, three differently-pruned
-      // readers), eager per-execution — see pairsFromSig.
-      val grouped = sh
-        .groupBy(col("simhash"))
-        .agg(min(col("doc_id")).as("gid"),
-          collect_list(col("doc_id")).as("members"),
-          count(lit(1)).as("gn"))
-        .localCheckpoint()
-      val bands = grouped
-        .select(col("gid"), col("simhash"),
-          explode(expr("sequence(0, 3)")).as("band"))
-        .withColumn("bh", expr("shiftright(simhash, band * 15) & 32767"))
-      // ---- interpreted-tail gate (r12 verdict items 5+8) ----
-      // The codegen GC pathology needs a LARGE pair expansion; at toy
-      // scale the interpreted tail costs +13-17% for nothing. Decide
-      // from the data, not a hand tag: (a) zero-cost necessary condition
-      // — input bytes (metadata stat only; below 16 MB no corpus can
-      // reach a dangerous expansion); (b) when big, measure the EXACT
-      // expansion mass from the checkpointed signature table — band-
-      // bucket collision mass Σc² (candidate rep-pairs incl. the salted
-      // skew that uniform estimates miss; r12: 1.04 B pairs from 500 k
-      // sigs) plus intra-group dup mass Σgn² (verbatim-replica regime).
-      // Two tiny aggregate jobs over the checkpointed frame — negligible
-      // next to any workload that passes (a). Published via session conf
-      // for the driver-contract layer's execConfIf (GQuery scaladoc).
-      val interpretedTail =
-        Catalog.tableBytes(dir, "documents") > (16L << 20) && {
-          val bucketMass = bands.groupBy(col("band"), col("bh"))
-            .agg(count(lit(1)).as("c"))
-            .agg(sum(col("c") * col("c"))).head.getLong(0)
-          val dupMass = grouped.agg(sum(col("gn") * col("gn"))).head.getLong(0)
-          bucketMass + dupMass > 16L * 1000 * 1000
-        }
-      spark.conf.set("graft.simhash.interpretedTail", interpretedTail.toString)
-      val candReps = bands.as("x")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-            col("x.gid") < col("y.gid"))
-        .select(col("x.gid").as("ga"), col("y.gid").as("gb"),
-          col("x.simhash").as("a_sh"), col("y.simhash").as("b_sh"))
-        .distinct()
-        .withColumn("hamming", expr("cast(bit_count(a_sh ^ b_sh) as int)"))
-        .filter(col("hamming") <= 3)
-        .select(col("ga"), col("gb"), col("hamming"))
-      // intra-group pairs (equal simhash, hamming 0) ride the same two
-      // expansion joins via a (gid, gid, 0) diagonal row; the da<db
-      // guard on the diagonal emits each member pair once
-      val mem = grouped.select(col("gid"), explode(col("members")).as("doc_id"))
-      val repPairs = candReps.union(
-        grouped.filter(col("gn") >= 2)
-          .select(col("gid").as("ga"), col("gid").as("gb"), lit(0).as("hamming")))
-      repPairs
-        .join(mem.select(col("gid").as("ga"), col("doc_id").as("da")), "ga")
-        .join(mem.select(col("gid").as("gb"), col("doc_id").as("db")), "gb")
-        .filter(col("ga") =!= col("gb") || col("da") < col("db"))
-        .select(least(col("da"), col("db")).as("a_id"),
-          greatest(col("da"), col("db")).as("b_id"), col("hamming"))
-      // no final orderBy: the result is a pair SET (the driver comparator
-      // canonicalizes row order itself), and a global sort of the
-      // output-sized frame is the single biggest cost at replica scale —
-      // the r9 probe measured the orderBy alone at 214 s of the 100×
-      // replica's 331 s (1.04 B pairs through a 32-partition range sort).
-      // Nobody range-sorts a billion-pair dedup candidate set at 100 TB.
-    },
+    (spark, dir) => simhashNearDupPairs(spark, dir),
     Some(s"""
       WITH $simhashCteSql,
       bands AS (SELECT doc_id, simhash, band,
@@ -993,7 +916,88 @@ object TextOps {
       SELECT a_id, b_id, CAST(bit_count(xor(a_sh, b_sh)) AS INTEGER) AS hamming
       FROM cand
       WHERE bit_count(xor(a_sh, b_sh)) <= 3
-      ORDER BY a_id, b_id"""),
+      ORDER BY a_id, b_id"""))
+
+  /** The t_simhash_neardup body. `interpretedTail` forces the size gate's
+    * decision (specs); None measures it from the data. */
+  private[graft] def simhashNearDupPairs(spark: SparkSession, dir: String,
+      interpretedTail: Option[Boolean] = None): DataFrame = {
+    val sh = simhashDf(spread(Catalog.table(spark, dir, "documents")))
+    // dup-collapse on the EXACT simhash value before the band join —
+    // the same discipline as pairsFromSig's signature collapse, and
+    // result-identical for the same reason: docs with equal simhash
+    // share every band (so intra-group pairs are always candidates,
+    // at hamming exactly 0) and contribute identical hamming to every
+    // cross pair. On a duplication-heavy corpus the band-bucket
+    // quadratic shrinks by the duplication factor squared: the r9
+    // probe on the 100× replica measured 500 k docs -> 72,405 distinct
+    // simhashes, with the uncollapsed plan spending 300 of its 421 s
+    // in a 3.36-BILLION-row candidate distinct (output: 1.04 B genuine
+    // pairs — that part is inherent to emitting every pair; this
+    // rewrite makes the candidate work scale with DISTINCT fingerprints
+    // while the output-sized expansion join stays ∝ result).
+    // localCheckpoint (one materialization, three differently-pruned
+    // readers), eager per-execution — see pairsFromSig.
+    val grouped = sh
+      .groupBy(col("simhash"))
+      .agg(min(col("doc_id")).as("gid"),
+        collect_list(col("doc_id")).as("members"),
+        count(lit(1)).as("gn"))
+      .localCheckpoint()
+    val bands = grouped
+      .select(col("gid"), col("simhash"),
+        explode(expr("sequence(0, 3)")).as("band"))
+      .withColumn("bh", expr("shiftright(simhash, band * 15) & 32767"))
+    // ---- interpreted-tail gate (r12 verdict items 5+8) ----
+    // The codegen GC pathology needs a LARGE pair expansion; at toy
+    // scale the interpreted tail costs +13-17% for nothing. Decide
+    // from the data, not a hand tag: (a) zero-cost necessary condition
+    // — input bytes (metadata stat only; below 16 MB no corpus can
+    // reach a dangerous expansion); (b) when big, measure the EXACT
+    // expansion mass from the checkpointed signature table — band-
+    // bucket collision mass Σc² (candidate rep-pairs incl. the salted
+    // skew that uniform estimates miss; r12: 1.04 B pairs from 500 k
+    // sigs) plus intra-group dup mass Σgn² (verbatim-replica regime).
+    // Two tiny aggregate jobs over the checkpointed frame — negligible
+    // next to any workload that passes (a).
+    val tail = interpretedTail.getOrElse(
+      Catalog.tableBytes(dir, "documents") > (16L << 20) && {
+        val bucketMass = bands.groupBy(col("band"), col("bh"))
+          .agg(count(lit(1)).as("c"))
+          .agg(sum(col("c") * col("c"))).head.getLong(0)
+        val dupMass = grouped.agg(sum(col("gn") * col("gn"))).head.getLong(0)
+        bucketMass + dupMass > 16L * 1000 * 1000
+      })
+    val candReps = bands.as("x")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+          col("x.gid") < col("y.gid"))
+      .select(col("x.gid").as("ga"), col("y.gid").as("gb"),
+        col("x.simhash").as("a_sh"), col("y.simhash").as("b_sh"))
+      .distinct()
+      .withColumn("hamming", expr("cast(bit_count(a_sh ^ b_sh) as int)"))
+      .filter(col("hamming") <= 3)
+      .select(col("ga"), col("gb"), col("hamming"))
+    // intra-group pairs (equal simhash, hamming 0) ride the same two
+    // expansion joins via a (gid, gid, 0) diagonal row; the da<db
+    // guard on the diagonal emits each member pair once
+    val mem = grouped.select(col("gid"), explode(col("members")).as("doc_id"))
+    val repPairs = candReps.union(
+      grouped.filter(col("gn") >= 2)
+        .select(col("gid").as("ga"), col("gid").as("gb"), lit(0).as("hamming")))
+    val pairs = repPairs
+      .join(mem.select(col("gid").as("ga"), col("doc_id").as("da")), "ga")
+      .join(mem.select(col("gid").as("gb"), col("doc_id").as("db")), "gb")
+      .filter(col("ga") =!= col("gb") || col("da") < col("db"))
+      .select(least(col("da"), col("db")).as("a_id"),
+        greatest(col("da"), col("db")).as("b_id"), col("hamming"))
+    // no final orderBy: the result is a pair SET (the oracle comparison
+    // canonicalizes row order itself), and a global sort of the
+    // output-sized frame is the single biggest cost at replica scale —
+    // the r9 probe measured the orderBy alone at 214 s of the 100×
+    // replica's 331 s (1.04 B pairs through a 32-partition range sort).
+    // Nobody range-sorts a billion-pair dedup candidate set at 100 TB.
+    //
     // whole-stage codegen is the WRONG regime for this plan's tail: the
     // two member-expansion joins fuse into one nested codegen loop whose
     // shouldStop() check sits only at the outer rep-pair scan, so every
@@ -1008,13 +1012,14 @@ object TextOps {
     // — it executes eagerly at build time (localCheckpoint) under the
     // session's codegen'd defaults.
     //
-    // SIZE-GATED (r12 item 8): the body measures the expansion mass from
-    // the data (see "interpreted-tail gate" above) and the override only
+    // SIZE-GATED (r12 item 8): the expansion mass is measured from the
+    // data (see "interpreted-tail gate" above) and the override only
     // applies when the measured regime is the dangerous one — toy-scale
-    // runs keep whole-stage codegen and its ~15% edge.
-    execConf = Map("spark.sql.codegen.wholeStage" -> "false"),
-    execConfIf = Some(s =>
-      s.conf.getOption("graft.simhash.interpretedTail").contains("true")))
+    // runs keep whole-stage codegen and its ~15% edge. It rides on the
+    // result frame's own session, never on the caller's.
+    if (tail) GraftBridge.withConf(pairs, Map("spark.sql.codegen.wholeStage" -> "false"))
+    else pairs
+  }
 
   // ------------------------------------------------------------ fingerprint
   /** Document fingerprinting: k-min sketch over rolling character

@@ -1,17 +1,24 @@
 package graft
 
 import graft.plans.AdaptiveGate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Pins the execution-mode gate's conf lifecycle: a small plan flips the
-  * session into single-shot mode with input-scaled partitions, reset
-  * restores the session's own settings exactly, and the sequence is
-  * idempotent (the gate never loses the original values by re-saving its
-  * own override). Also pins that the driver-contract layer honors
-  * `needsAqe` declarations. */
+/** Pins the execution-mode gate: a small plan comes back re-bound to a
+  * child session that carries single-shot mode with input-scaled
+  * partitions, a big plan to one that starts AQE wider, and the caller's
+  * own conf never changes. Also pins that the contract layer (SparkEntry) builds
+  * bodies under the caller's conf and honors `needsAqe` declarations. */
 class AdaptiveGateSpec extends SparkSpec {
 
-  private def conf(k: String) = spark.conf.get(k)
+  private def conf(df: DataFrame, k: String) = df.sparkSession.conf.get(k)
+
+  /** Runs `body` with the caller's shuffle width set to `parts`. */
+  private def withParts[T](parts: Int)(body: => T): T = {
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
 
   test("inputBytes reads leaf stats off the analyzed plan") {
     val df = Catalog.table(spark, sf0001, "lineitem")
@@ -23,29 +30,34 @@ class AdaptiveGateSpec extends SparkSpec {
     assert(in < (1L << 30))
   }
 
-  test("tune flips small plans to single-shot and reset restores exactly") {
-    val origParts = conf("spark.sql.shuffle.partitions")
+  test("tune gates small plans on a child session; caller conf unchanged") {
+    val before = spark.conf.getAll
     val df = Catalog.table(spark, sf0001, "orders")
       .groupBy(col("o_orderstatus")).agg(count(lit(1)))
-    AdaptiveGate.tune(spark, df)
-    assert(conf("spark.sql.adaptive.enabled") === "false")
-    assert(conf("spark.sql.constraintPropagation.enabled") === "false")
-    val parts = conf("spark.sql.shuffle.partitions").toInt
-    assert(parts >= 1 && parts <= origParts.toInt)
-    // width floor: narrowing never goes below min(MinPartitions, orig) —
-    // the round-9 FloorProbe A/B (SF1: q02 199→157 ms with a floor of 8)
-    assert(parts >= math.min(AdaptiveGate.MinPartitions.toInt, origParts.toInt))
-    // second tune on another small plan must keep the ORIGINAL saved
-    // partitions, not re-save the gate's own override
-    AdaptiveGate.tune(spark,
-      Catalog.table(spark, sf0001, "customer").select("c_custkey"))
-    AdaptiveGate.reset(spark)
-    assert(conf("spark.sql.shuffle.partitions") === origParts)
-    assert(conf("spark.sql.adaptive.enabled") === "true")
-    assert(conf("spark.sql.constraintPropagation.enabled") === "true")
-    // reset with no override held is a no-op
-    AdaptiveGate.reset(spark)
-    assert(conf("spark.sql.shuffle.partitions") === origParts)
+    val gated = AdaptiveGate.tune(df)
+    assert(!(gated.sparkSession eq spark), "decision must not live on the caller")
+    assert(conf(gated, "spark.sql.adaptive.enabled") === "false")
+    assert(conf(gated, "spark.sql.constraintPropagation.enabled") === "false")
+    assert(spark.conf.getAll === before, "tune wrote the caller's conf")
+    // the same decision again reuses the same child (codegen-cache reuse)
+    assert(AdaptiveGate.tune(df).sparkSession eq gated.sparkSession)
+    assert(gated.collect().toSet === df.collect().toSet)
+    // file-backed narrowing: input/8 MB clamped to [min(floor, full), full]
+    // — with a wide caller (64) the round-9 floor of 8 is what shows
+    withParts(64) {
+      val fileDf = Catalog.table(spark, sf0001, "orders").select("o_orderkey")
+      val expected = math.min(64L, math.max(AdaptiveGate.MinPartitions,
+        AdaptiveGate.inputBytes(fileDf) / AdaptiveGate.BytesPerPartition)).toInt
+      assert(conf(AdaptiveGate.tune(fileDf), "spark.sql.shuffle.partitions").toInt
+        === expected)
+      assert(expected < 64, "fixture should be small enough to narrow")
+    }
+    // big plans keep AQE and start 16x wider (Range stats: 8 B x 400 M ≈ 3.2 GB)
+    val big = AdaptiveGate.tune(spark.range(400L * 1000 * 1000).groupBy().count())
+    assert(conf(big, "spark.sql.adaptive.enabled") === "true")
+    assert(conf(big, "spark.sql.adaptive.coalescePartitions.initialPartitionNum").toInt ===
+      16 * spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(spark.conf.getAll === before)
   }
 
   test("inputBytes counts leaves inside subquery expressions") {
@@ -64,39 +76,24 @@ class AdaptiveGateSpec extends SparkSpec {
   }
 
   test("tune keeps FULL width for small plans with non-file leaves") {
-    val origParts = conf("spark.sql.shuffle.partitions")
     // checkpointed lineage = LogicalRDD leaf: bytes no longer proxy the
     // compute behind it (k-means/PQ training shape) — single-shot still
     // saves the AQE stage rounds, but the width must NOT be narrowed by
     // the (meaningless) leaf-byte estimate
-    val ck = Catalog.table(spark, sf0001, "embeddings").localCheckpoint()
-    AdaptiveGate.tune(spark, ck.groupBy().count())
-    assert(conf("spark.sql.adaptive.enabled") === "false")
-    assert(conf("spark.sql.shuffle.partitions") === origParts)
-    // a subsequent file-backed small plan re-applies byte-sizing off the
-    // SAME saved original (no override leakage between modes). With the
-    // round-9 width floor the clamp is min(orig, max(floor, in/8MB)) —
-    // at this spec session's orig=4 (< MinPartitions) that equals orig,
-    // so pin the exact formula rather than strict narrowing
-    val fileDf = Catalog.table(spark, sf0001, "orders").select("o_orderkey")
-    AdaptiveGate.tune(spark, fileDf)
-    val expected = math.min(origParts.toLong, math.max(
-      AdaptiveGate.MinPartitions,
-      AdaptiveGate.inputBytes(fileDf) / AdaptiveGate.BytesPerPartition)).toInt
-    assert(conf("spark.sql.shuffle.partitions").toInt === expected)
-    AdaptiveGate.tune(spark, ck.groupBy().count())
-    assert(conf("spark.sql.shuffle.partitions") === origParts)
-    AdaptiveGate.reset(spark)
-    assert(conf("spark.sql.adaptive.enabled") === "true")
-    assert(conf("spark.sql.shuffle.partitions") === origParts)
+    withParts(64) {
+      val ck = Catalog.table(spark, sf0001, "embeddings").localCheckpoint()
+      val gated = AdaptiveGate.tune(ck.groupBy().count())
+      assert(conf(gated, "spark.sql.adaptive.enabled") === "false")
+      assert(conf(gated, "spark.sql.shuffle.partitions") === "64")
+      // a file-backed small plan under the same caller still narrows
+      val fileDf = AdaptiveGate.tune(
+        Catalog.table(spark, sf0001, "orders").select("o_orderkey"))
+      assert(conf(fileDf, "spark.sql.shuffle.partitions").toInt < 64)
+    }
   }
 
-  test("contract layer resets conf BEFORE every query body (eager phase)") {
-    val origParts = conf("spark.sql.shuffle.partitions")
-    // leave the session gated, as a prior small query would
-    AdaptiveGate.tune(spark,
-      Catalog.table(spark, sf0001, "orders").select("o_orderkey"))
-    assert(conf("spark.sql.adaptive.enabled") === "false")
+  test("query bodies build under the caller's own conf (eager phase)") {
+    val before = spark.conf.getAll
     var seenAdaptive: String = null
     var seenParts: String = null
     val probe = GQuery("spec_probe", "observes conf during eager build",
@@ -107,25 +104,25 @@ class AdaptiveGateSpec extends SparkSpec {
         seenParts = s.conf.get("spark.sql.shuffle.partitions")
         Catalog.table(s, dir, "region")
       }, None)
-    SparkEntry.tuned(probe)(spark, sf0001)
+    // a gated frame from a previous query leaves nothing behind
+    SparkEntry.queries("q06_scalar_agg")(spark, sf0001).collect()
+    val df = SparkEntry.tuned(probe)(spark, sf0001)
     assert(seenAdaptive === "true",
       "query body inherited the previous plan's single-shot conf")
-    assert(seenParts === origParts)
-    AdaptiveGate.reset(spark)
+    assert(seenParts === before("spark.sql.shuffle.partitions"))
+    assert(conf(df, "spark.sql.adaptive.enabled") === "false",
+      "the returned frame should carry the gate's decision")
+    assert(spark.conf.getAll === before)
   }
 
   test("SparkEntry honors needsAqe: adaptive demos run under full AQE") {
-    val origParts = conf("spark.sql.shuffle.partitions")
-    // leave the session in gated state, as a prior small query would
-    AdaptiveGate.tune(spark,
-      Catalog.table(spark, sf0001, "orders").select("o_orderkey"))
-    assert(conf("spark.sql.adaptive.enabled") === "false")
+    val before = spark.conf.getAll
     val aqeNames = Registry.all.filter(_.needsAqe).map(_.name)
     assert(aqeNames.nonEmpty, "expected at least one needsAqe query")
-    // constructing a needsAqe query through the contract layer restores
-    // full-AQE defaults BEFORE its body runs
-    SparkEntry.queries(aqeNames.head)(spark, sf0001)
-    assert(conf("spark.sql.adaptive.enabled") === "true")
-    assert(conf("spark.sql.shuffle.partitions") === origParts)
+    // a needsAqe frame executes on the caller's own session and conf
+    val df = SparkEntry.queries(aqeNames.head)(spark, sf0001)
+    assert(df.sparkSession eq spark)
+    assert(conf(df, "spark.sql.adaptive.enabled") === "true")
+    assert(spark.conf.getAll === before)
   }
 }

@@ -67,7 +67,7 @@ class LocalDimSpec extends SparkSpec {
   }
 
   test("gate-scoped global sort becomes 1-partition local sort; ungated keeps range sort") {
-    // SparkEntry, not Registry: the AdaptiveGate (whose marker conf scopes
+    // SparkEntry, not Registry: the AdaptiveGate (whose child session scopes
     // OnePartitionSort) is applied by the driver-contract layer only
     val gated = SparkEntry.queries("q02_min_within_group")(spark, sf0001)
     val sGated = PlanDescriber.simpleString(gated)
@@ -107,33 +107,37 @@ class LocalDimSpec extends SparkSpec {
     assert(existsCorr.collect().head.getLong(0) === total)
   }
 
-  test("a big plan inheriting a leaked gate marker keeps its global sort") {
-    // r10 advice (medium): the AdaptiveGate marker conf is session state
-    // that can outlive the small query that set it; OnePartitionSort must
-    // re-derive smallness from the plan in hand so a big plan planned
-    // under a leaked marker never serializes its sort into one partition.
+  /** A session carrying the gate's single-shot decision: the child
+    * [[graft.plans.AdaptiveGate.tune]] binds a small plan to. */
+  private def gatedSession =
+    graft.plans.AdaptiveGate.tune(
+      Catalog.table(spark, sf0001, "region").select("r_regionkey")).sparkSession
+
+  test("a big plan under a gated conf keeps its global sort") {
+    // r10 advice (medium): OnePartitionSort must re-derive smallness from
+    // the plan in hand, so a big plan planned on a gated session never
+    // serializes its sort into one partition.
     import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
-    // clean slate, then OWN the marker; restore via reset (NOT a bare
-    // unset — that would orphan the adaptive/constraint overrides)
-    graft.plans.AdaptiveGate.reset(spark)
-    spark.conf.set("graft.autotune.origPartitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
-    try {
-      // Range stats: 8 B x 400 M rows ≈ 3.2 GB, over SmallPlanBytes
-      val big = spark.range(400L * 1000 * 1000).orderBy(col("id").desc)
-      val bigOpt = big.queryExecution.optimizedPlan
-      assert(bigOpt.exists { case s: Sort => s.global; case _ => false },
-        s"big plan must keep its parallel global sort:\n$bigOpt")
-      assert(!bigOpt.exists {
-        case Repartition(1, true, _) => true; case _ => false },
-        s"big plan must not be squeezed into one partition:\n$bigOpt")
-      // and a genuinely small plan under the same marker still rewrites
-      val small = spark.range(100).orderBy(col("id").desc)
-      val smallOpt = small.queryExecution.optimizedPlan
-      assert(smallOpt.exists {
-        case Repartition(1, true, _) => true; case _ => false },
-        s"small plan under the gate should take the 1-partition sort:\n$smallOpt")
-    } finally graft.plans.AdaptiveGate.reset(spark)
+    val gated = gatedSession
+    assert(!(gated eq spark))
+    // Range stats: 8 B x 400 M rows ≈ 3.2 GB, over SmallPlanBytes
+    val big = gated.range(400L * 1000 * 1000).orderBy(col("id").desc)
+    val bigOpt = big.queryExecution.optimizedPlan
+    assert(bigOpt.exists { case s: Sort => s.global; case _ => false },
+      s"big plan must keep its parallel global sort:\n$bigOpt")
+    assert(!bigOpt.exists {
+      case Repartition(1, true, _) => true; case _ => false },
+      s"big plan must not be squeezed into one partition:\n$bigOpt")
+    // and a genuinely small plan on the same session still rewrites
+    val small = gated.range(100).orderBy(col("id").desc)
+    val smallOpt = small.queryExecution.optimizedPlan
+    assert(smallOpt.exists {
+      case Repartition(1, true, _) => true; case _ => false },
+      s"small plan under the gate should take the 1-partition sort:\n$smallOpt")
+    // the caller's own session plans the same small sort ungated
+    assert(!spark.range(100).orderBy(col("id").desc).queryExecution.optimizedPlan
+      .exists { case Repartition(1, true, _) => true; case _ => false },
+      "an ungated session must keep its range sort")
   }
 
   test("protected top-k survives when its subtree contains a rewritten sort") {
@@ -142,25 +146,21 @@ class LocalDimSpec extends SparkSpec {
     // structural recursion must keep Limit(Sort) -> TakeOrderedAndProject
     // while still rewriting the INNER global sort.
     import org.apache.spark.sql.catalyst.plans.logical.Repartition
-    graft.plans.AdaptiveGate.reset(spark)
-    spark.conf.set("graft.autotune.origPartitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
-    try {
-      // monotonically_increasing_id blocks EliminateSorts, so the inner
-      // global sort survives into the optimizer where OnePartitionSort
-      // sees both sorts in one plan
-      val inner = spark.range(100).orderBy(col("id").desc)
-        .withColumn("r", monotonically_increasing_id())
-      val topk = inner.orderBy(col("id")).limit(5)
-      val opt = topk.queryExecution.optimizedPlan
-      assert(opt.exists {
-        case Repartition(1, true, _) => true; case _ => false },
-        s"inner global sort should still be rewritten:\n$opt")
-      val phys = topk.queryExecution.executedPlan.toString
-      assert(phys.contains("TakeOrderedAndProject"),
-        s"outer top-k must stay TakeOrderedAndProject:\n$phys")
-      assert(topk.select(col("id")).collect().map(_.getLong(0)).toSeq
-        === (0L to 4L), "top-k result wrong")
-    } finally graft.plans.AdaptiveGate.reset(spark)
+    val gated = gatedSession
+    // monotonically_increasing_id blocks EliminateSorts, so the inner
+    // global sort survives into the optimizer where OnePartitionSort
+    // sees both sorts in one plan
+    val inner = gated.range(100).orderBy(col("id").desc)
+      .withColumn("r", monotonically_increasing_id())
+    val topk = inner.orderBy(col("id")).limit(5)
+    val opt = topk.queryExecution.optimizedPlan
+    assert(opt.exists {
+      case Repartition(1, true, _) => true; case _ => false },
+      s"inner global sort should still be rewritten:\n$opt")
+    val phys = topk.queryExecution.executedPlan.toString
+    assert(phys.contains("TakeOrderedAndProject"),
+      s"outer top-k must stay TakeOrderedAndProject:\n$phys")
+    assert(topk.select(col("id")).collect().map(_.getLong(0)).toSeq
+      === (0L to 4L), "top-k result wrong")
   }
 }

@@ -28,9 +28,7 @@ class PlanSnapshotSpec extends SparkSpec {
 
   snapshotted.foreach { name =>
     test(s"$name: normalized physical plan matches the committed snapshot") {
-      // snapshots are of UNGATED plans: clear any AdaptiveGate marker a
-      // SparkEntry-path suite left in the shared session (see PlanSpec.q)
-      graft.plans.AdaptiveGate.reset(spark)
+      // snapshots are of UNGATED plans (Registry, not SparkEntry)
       val plan = PlanDescriber.normalized(
         Registry.byName(name).run(spark, sf0001))
       val file = dir.resolve(s"$name.txt")

@@ -10,14 +10,9 @@ import org.apache.spark.sql.functions._
   * tests/distributed_aggregation.rs:32-91.) */
 class PlanSpec extends SparkSpec {
 
-  private def q(name: String) = {
-    // this suite pins plan SHAPES under the session's own conf: clear any
-    // AdaptiveGate marker a SparkEntry-path suite left behind in the
-    // shared session, or the gate-scoped OnePartitionSort rewrite (r10)
-    // leaks into plans that are meant to be ungated
-    graft.plans.AdaptiveGate.reset(spark)
-    Registry.byName(name).run(spark, sf0001)
-  }
+  // plan SHAPES under the session's own conf: Registry, not the gated
+  // SparkEntry path
+  private def q(name: String) = Registry.byName(name).run(spark, sf0001)
 
   test("q01: filter and projection are pushed into the parquet scan") {
     val plan = PlanDescriber.formatted(q("q01_pricing_summary"))

@@ -113,28 +113,32 @@ class RegistrySpec extends SparkSpec {
     }
   }
 
-  test("execConf applies for its query's execution and restores before the next") {
+  test("simhash interpreted tail rides on its own frame, both sides of the size gate") {
     val key = "spark.sql.codegen.wholeStage"
-    val before = spark.conf.get(key)
-    // t_simhash_neardup declares wholeStage=false (the expansion tail's
-    // buffered-copy GC regime, r12) — SIZE-GATED since r13: at sf0.001
-    // the measured expansion mass is tiny, so the override must NOT
-    // apply (codegen keeps its ~15% toy-scale edge)...
-    val dfSmall = SparkEntry.queries("t_simhash_neardup")(spark, sf0001)
-    assert(spark.conf.get("graft.simhash.interpretedTail") === "false",
-      "toy-scale corpus must measure below the interpreted-tail threshold")
-    assert(spark.conf.get(key) === before,
-      "size gate failed: execConf applied at toy scale")
-    dfSmall.count()
-    // ...but when the gate signal says the dangerous regime, the
-    // override applies for ITS execution (force the signal to isolate
-    // the apply/restore mechanics from corpus size)...
-    val q = Registry.byName("t_simhash_neardup")
-    val forced = q.copy(execConfIf = Some(_ => true))
-    SparkEntry.tuned(forced)(spark, sf0001)
-    assert(spark.conf.get(key) === "false", "execConf not applied")
-    // ...and is gone by the time the NEXT query's body builds
-    SparkEntry.queries("q01_pricing_summary")(spark, sf0001).count()
-    assert(spark.conf.get(key) === before, "execConf leaked to the next query")
+    val before = spark.conf.getAll
+    // executed-plan search that descends into AQE query stages
+    object stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def codegen(df: org.apache.spark.sql.DataFrame) =
+      stages.find(df.queryExecution.executedPlan)(
+        _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined
+    // t_simhash_neardup turns whole-stage codegen off for its expansion
+    // tail (the buffered-copy GC regime, r12) — SIZE-GATED since r13: at
+    // sf0.001 the measured expansion mass is tiny, so codegen stays on
+    // (its ~15% toy-scale edge)...
+    val small = SparkEntry.queries("t_simhash_neardup")(spark, sf0001)
+    val rows = small.collect().toSet
+    assert(small.sparkSession.conf.get(key) === "true",
+      "size gate failed: interpreted tail chosen at toy scale")
+    assert(codegen(small))
+    // ...and the dangerous branch (forced, to isolate the mechanics from
+    // corpus size) puts the override on the returned frame's session
+    // only, through the same contract layer
+    val forced = SparkEntry.tuned(Registry.byName("t_simhash_neardup").copy(
+      run = (s, dir) => graft.queries.TextOps
+        .simhashNearDupPairs(s, dir, interpretedTail = Some(true))))(spark, sf0001)
+    assert(forced.sparkSession.conf.get(key) === "false", "override not applied")
+    assert(forced.collect().toSet === rows)
+    assert(!codegen(forced), "override did not reach execution")
+    assert(spark.conf.getAll === before, "override leaked to the caller")
   }
 }
